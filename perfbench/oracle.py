@@ -8,10 +8,10 @@ Two comparison styles:
   from the engine and a reference query. Order-insensitive and exact;
   maps are compared through their text form (DuckDB cannot compare
   them as values).
-- :func:`diff_frames` — the engine's oracle-harness normalisation for
-  query results: columns sorted by name, rows sorted by every column,
-  exact compare, and an int/float dtype-class split counts as a
-  mismatch.
+- :func:`diff_frames` — the engine's own oracle harness
+  (``tests/oracle_harness.py``) for query results: columns sorted by
+  name, rows sorted by every column, exact compare, and an int/float
+  dtype-class split counts as a mismatch.
 
 Both take ``corrupt=True`` to alter one expected row first; the
 benchmark's own tests use it to show each check can fail.
@@ -19,10 +19,15 @@ benchmark's own tests use it to show each check can fail.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import duckdb
-import numpy as np
 import pandas as pd
 import pyarrow as pa
+from tests.oracle_harness import compare
+
+if not __debug__:  # compare() reports a mismatch through assert
+    raise ImportError("the output checks need assertions; run Python without -O")
 
 
 def connect(parquet: dict[str, str] | None = None) -> duckdb.DuckDBPyConnection:
@@ -84,34 +89,17 @@ def diff_tables(con: duckdb.DuckDBPyConnection, got: pa.Table, want_sql: str,
     return None
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).astype("datetime64[us]")
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-
-
 def diff_frames(got: pd.DataFrame, want: pd.DataFrame, label: str,
                 corrupt: bool = False) -> str | None:
+    """None when ``got`` equals ``want`` under the engine's oracle
+    harness (``tests.oracle_harness.compare``), else its reason."""
     if corrupt:
         want = want.copy()
         c = want.columns[0]
         want.loc[want.index[0], c] = want[c].iloc[0] + 1
-    got, want = _normalize(got), _normalize(want)
-    if list(got.columns) != list(want.columns):
-        return f"{label}: columns {list(got.columns)} != {list(want.columns)}"
-    if len(got) != len(want):
-        return f"{label}: {len(got)} rows, {len(want)} expected"
-    for c in got.columns:
-        g, w = got[c].to_numpy(), want[c].to_numpy()
-        g_num, w_num = np.issubdtype(g.dtype, np.number), np.issubdtype(w.dtype, np.number)
-        if g_num and w_num and (np.issubdtype(g.dtype, np.floating)
-                                != np.issubdtype(w.dtype, np.floating)):
-            return f"{label}: dtype class of {c!r} differs ({g.dtype} vs {w.dtype})"
-        bad = ~pd.Series(g).astype(str).eq(pd.Series(w).astype(str)).to_numpy()
-        if bad.any():
-            return f"{label}: column {c!r} differs in {int(bad.sum())} rows"
+    try:
+        # compare() takes the engine side as a DataFrame to collect
+        compare(SimpleNamespace(toPandas=lambda: got), want, label)
+    except AssertionError as e:
+        return str(e)
     return None

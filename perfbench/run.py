@@ -41,8 +41,9 @@ PACKAGE = "apache_iceberg_tables_migration_tool_spark"
 
 #: name → unit of the untraced run's result metrics. ``unit_cpu_s`` is
 #: the median CPU seconds the process tree (driver, JVM, Python
-#: workers) spent on one unit of work (migrate: a plan→copy→verify
-#: pass; churn: one maintenance cycle; corpus: one build). CPU time
+#: workers) spent in the engine operations of one unit of work
+#: (migrate: a plan→copy→verify pass; churn: one maintenance cycle;
+#: corpus: one build), summed per operation as ``unit_s`` is. CPU time
 #: leaves out what the hypervisor steals, so it holds steady on a
 #: shared host where the unit's wall time (``unit_s``, in the report)
 #: can double. The report line adds every other end-to-end metric.
@@ -130,8 +131,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--scale", type=float, default=None,
-                    help="input scale (default: the workload's own)")
     args = ap.parse_args(argv)
 
     cpus = guard_environment()
@@ -163,7 +162,7 @@ def main(argv: list[str] | None = None) -> int:
         session_s = time.monotonic() - t0
         counters = SparkCounters(spark)
         tracer = Tracer(counters.next_job_id) if args.trace else NullTracer()
-        wl = registry[args.workload](spark, work, args.seed, tracer, args.scale)
+        wl = registry[args.workload](spark, work, args.seed, tracer, sampler=sampler)
         wl.setup()
         setup_s = time.monotonic() - t0
         if args.trace:
@@ -172,11 +171,10 @@ def main(argv: list[str] | None = None) -> int:
         cpu0, steal0, loop0 = sampler.cpu_seconds(), procstat.steal_seconds(), time.monotonic()
         unit_cpu: list[float] = []
         while True:
-            c0 = sampler.cpu_seconds()
+            c0 = wl.op_cpu
             try:
                 wl.units.append(wl.unit())
-                sampler.sample()
-                unit_cpu.append(sampler.cpu_seconds() - c0)
+                unit_cpu.append(wl.op_cpu - c0)
                 wl.after_unit()
             except Exception as e:  # an operation or its check raised
                 wl.failed += 1

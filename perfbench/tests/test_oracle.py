@@ -23,4 +23,4 @@ def test_diff_frames_normalises_and_detects():
     assert oracle.diff_frames(got, want, "m") is None
     assert oracle.diff_frames(got, want, "m", corrupt=True) is not None
     as_float = want.astype({"doc_id": "float64"})
-    assert "dtype class" in oracle.diff_frames(got, as_float, "m")
+    assert "dtype-class" in oracle.diff_frames(got, as_float, "m")

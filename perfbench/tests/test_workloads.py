@@ -55,16 +55,26 @@ def test_churn_point_read_check_catches_a_wrong_row(spark, tmp_path):
     assert wl.failed == 1 and f"lk={key}" in wl.errors[0]
 
 
-def _run(cwd: str, *args: str) -> subprocess.CompletedProcess:
+def _run(cwd: str, *args: str, code: str | None = None) -> subprocess.CompletedProcess:
+    """The command in ``cwd``; ``code`` runs instead of the script,
+    with the benchmark's directory on ``sys.path`` as the script has."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_GRAFT_CPUS"] = "2"
-    return subprocess.run([sys.executable, "perfbench/run.py", *args], cwd=cwd, env=env,
+    if code is None:
+        cmd = ["perfbench/run.py"]
+    else:
+        cmd = ["-c", code]
+        env["PYTHONPATH"] = os.path.join(cwd, "perfbench")
+    return subprocess.run([sys.executable, *cmd, *args], cwd=cwd, env=env,
                           capture_output=True, text=True, timeout=600)
 
 
 def test_command_prints_contract_result():
+    # run.main exactly as the command line runs it, on tiny inputs
+    code = ("import sys, run, workloads.churn as c; c.Churn.scale = 0.001; "
+            "sys.exit(run.main(sys.argv[1:]))")
     p = _run(run.ROOT, "--workload", "churn", "--seed", "5", "--seconds", "1",
-             "--trace", "0", "--scale", "0.001")
+             "--trace", "0", code=code)
     assert p.returncode == 0, p.stderr[-2000:]
     report, result = (json.loads(x) for x in p.stdout.strip().splitlines()[-2:])
     assert set(result) == {"correct", "attempted", "failed", "metrics"}

@@ -38,11 +38,11 @@ class Metric:
 
 class Workload:
     name = ""
-    #: default input scale when the command line gives none
+    #: input scale when the constructor is given none
     scale = 0.01
 
     def __init__(self, spark, work_dir: str, seed: int, tracer=None,
-                 scale: float | None = None):
+                 scale: float | None = None, sampler=None):
         self.spark = spark
         self.work = work_dir
         self.seed = seed
@@ -55,9 +55,13 @@ class Workload:
         #: per-layer samples only the workload can take (traced run)
         self.layer: dict[str, list[float]] = defaultdict(list)
         self.units: list[Unit] = []
-        #: running total of op latencies; a unit's time is its delta,
-        #: so the benchmark's own checks between ops never count
+        #: process-tree sampler (``procstat.TreeSampler``) for op CPU time
+        self.sampler = sampler
+        #: running totals of op latencies and op CPU seconds; a unit's
+        #: figures are their deltas, so the benchmark's own checks and
+        #: model updates between ops never count
         self.op_seconds = 0.0
+        self.op_cpu = 0.0
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.work, *parts)
@@ -65,13 +69,22 @@ class Workload:
     def op(self, kind: str, fn, *args, **kwargs):
         """Run one timed engine operation."""
         self.attempted += 1
+        c0 = self._cpu()
         t0 = time.monotonic()
         with self.tracer.span(f"op.{kind}"):
             out = fn(*args, **kwargs)
         dt = time.monotonic() - t0
+        self.op_cpu += self._cpu() - c0
         self.lat[kind].append(dt)
         self.op_seconds += dt
         return out
+
+    def _cpu(self) -> float:
+        """CPU seconds of the process tree so far (0 without a sampler)."""
+        if self.sampler is None:
+            return 0.0
+        self.sampler.sample()
+        return self.sampler.cpu_seconds()
 
     def expect(self, problem: str | None) -> None:
         """Record an output-check result; a mismatch is a failed op."""

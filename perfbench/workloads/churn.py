@@ -17,6 +17,19 @@ One unit is one maintenance cycle of the op stream:
    refresh would fail with ``LookupError`` (changelog start snapshot
    expired).
 
+The traffic shape is chosen, not measured. ``CHANGED`` = 16 keys per
+commit is a small delta that still lands in most of lineitem's eight
+key-range files (each file is missed with chance (7/8)^16 ≈ 0.12), so
+a COW commit rewrites most of the table. ``INSERTED`` = 4 new keys per
+upsert keeps the table growing slowly. One commit of each class per
+cycle keeps a unit short (median 26.5 s over ten seeds on a 4-vCPU
+VM), so a run is one cold unit and the gate's runs fit their time
+budget. The cost is that a read sees at most two live delete files
+(after the two MOR commits), far short of the 20 commits since the
+last compaction over which a point read was seen to climb from 0.2 s
+to 3.5 s on this engine; the ``read_tail_ms`` regime of long
+delete-file chains is not exercised.
+
 The seed picks the keys, values and read targets. A DuckDB model
 table replays the same ops: every point read is compared with it as
 it happens, and at the end the three tables and the view are compared
