@@ -22,8 +22,8 @@ commit is a small delta that still lands in most of lineitem's eight
 key-range files (each file is missed with chance (7/8)^16 ≈ 0.12), so
 a COW commit rewrites most of the table. ``INSERTED`` = 4 new keys per
 upsert keeps the table growing slowly. One commit of each class per
-cycle keeps a unit short (median 26.5 s over ten seeds on a 4-vCPU
-VM), so a run is one cold unit and the gate's runs fit their time
+cycle keeps a unit short (medians of 26.5 s and 28.8 s in two sets of
+ten seeds on a 4-vCPU VM), so a run is one cold unit and the gate's runs fit their time
 budget. The cost is that a read sees at most two live delete files
 (after the two MOR commits), far short of the 20 commits since the
 last compaction over which a point read was seen to climb from 0.2 s
