@@ -2,10 +2,11 @@
 
 Reference stages 4+6 rebuilt:
 
-- schema comparison is a relational anti-join on (column, type) pairs
-  in both directions (J1) — and unlike the reference
-  (``4_verify_table_creation.py:86-97``) it compares *types*, not
-  just names, and partition specs;
+- schema comparison is a set difference of (column, type) pairs in
+  both directions, computed on the driver like the reference's
+  (``4_verify_table_creation.py:86-97``, J1) — two ~16-column
+  schemas need no Spark job — but unlike the reference it compares
+  *types*, not just names, and partition specs;
 - record counts come from snapshot manifests (metadata-only);
 - the data checksum is the hardened xxhash64 SUM(decimal)+BIT_XOR
   combine (G5 fix) from operators.integrity.
@@ -41,22 +42,25 @@ VERIFY_SCHEMA = T.StructType(
 )
 
 
+def _schema_diff_rows(a: T.StructType, b: T.StructType) -> list[tuple[str, str, str]]:
+    """``(col_name, col_type, side)`` for every (name, type) pair present
+    on one side only — empty ⇔ schemas equivalent (set semantics:
+    duplicate pairs count once)."""
+    fa = {(f.name, f.dataType.simpleString()) for f in a.fields}
+    fb = {(f.name, f.dataType.simpleString()) for f in b.fields}
+    return [(n, t, "source_only") for n, t in sorted(fa - fb)] + [
+        (n, t, "target_only") for n, t in sorted(fb - fa)
+    ]
+
+
 def schema_diff(
     spark: SparkSession, a: T.StructType, b: T.StructType
 ) -> DataFrame:
-    """Columns present on one side only (name+type anti-join, both
-    directions) — empty ⇔ schemas equivalent."""
-    fa = [(f.name, f.dataType.simpleString()) for f in a.fields]
-    fb = [(f.name, f.dataType.simpleString()) for f in b.fields]
-    dfa = spark.createDataFrame(fa, "col_name string, col_type string")
-    dfb = spark.createDataFrame(fb, "col_name string, col_type string")
-    only_a = dfa.join(dfb, ["col_name", "col_type"], "left_anti").selectExpr(
-        "col_name", "col_type", "'source_only' AS side"
+    """Columns present on one side only, as a DataFrame of
+    ``(col_name, col_type, side)`` — empty ⇔ schemas equivalent."""
+    return spark.createDataFrame(
+        _schema_diff_rows(a, b), "col_name string, col_type string, side string"
     )
-    only_b = dfb.join(dfa, ["col_name", "col_type"], "left_anti").selectExpr(
-        "col_name", "col_type", "'target_only' AS side"
-    )
-    return only_a.unionByName(only_b)
 
 
 def _verify_one(
@@ -72,7 +76,7 @@ def _verify_one(
         s_snap = s_tbl.resolve_snapshot(snapshot_id=entry.snapshot_id)
         d_snap = d_tbl.resolve_snapshot()
 
-        sch_ok = schema_diff(spark, s_tbl.schema(entry.snapshot_id), d_tbl.schema()).isEmpty()
+        sch_ok = not _schema_diff_rows(s_tbl.schema(entry.snapshot_id), d_tbl.schema())
         part_ok = list(s_snap.partition_spec) == list(d_snap.partition_spec)
         # table properties must round-trip (the reference collects
         # them per table, 2_collect_database_schema_info.py:176-184)
@@ -112,7 +116,9 @@ def verify(
 
     Tables verify concurrently from a thread pool (same shape as
     ``migrate``): each table's verification is a chain of small
-    independent read-only jobs (schema anti-join, two checksum scans),
+    independent read-only jobs (the two checksum scans; the schema,
+    partition-spec, property and count checks read only metadata on
+    the driver),
     so overlapping tables lets the next table's jobs back-fill the
     executor slots the current one's tail leaves idle — the
     stragglers-and-idle-capacity pattern. ``pool.map`` preserves plan

@@ -13,6 +13,8 @@ creation and bake in the settings that matter at 100 TB:
   be answered from footers — the reference's ``df.count()`` before a
   full copy (``5_migrate_tables_data.py:76``) becomes metadata-only).
 - Arrow for any pandas interchange (our Pandas UDF paths).
+- Scan paths listed on the driver: snapcat reads name their exact
+  files, so no read pays a Spark file-listing job.
 """
 
 from __future__ import annotations
@@ -36,6 +38,13 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.files.maxPartitionBytes": "128m",
+    # List scan paths on the driver, never in a Spark job. Above this
+    # many paths per read Spark starts a parallel file-listing job (one
+    # task per path); snapcat reads always pass the exact data files
+    # its manifest names, on the local filesystem, so that job would
+    # only stat files the driver stats more cheaply — and the driver
+    # already reads every written file's footer.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "2147483647",
     # local runs: broadcast generously; on a real cluster this stays
     # the 10m default unless overridden per-join with broadcast()
     "spark.sql.autoBroadcastJoinThreshold": "64m",

@@ -3631,17 +3631,15 @@ class SnapCatalog:
         # Spark's default INT96 timestamps carry NO parquet min/max
         # stats — write TIMESTAMP_MICROS (int64) so manifests get
         # timestamp bounds and time-range predicates prune (INT96 is
-        # deprecated in the parquet spec anyway)
+        # deprecated in the parquet spec anyway). The session conf is
+        # shared by concurrent writes (migrate and WAP thread pools)
+        # and a per-write .option() is ignored, so set it once and never
+        # restore it: a restore from one write could land while another
+        # is being planned and give that write INT96 columns.
         conf = df.sparkSession.conf
-        prev_tt = conf.get("spark.sql.parquet.outputTimestampType", None)
-        conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        try:
-            writer.parquet(commit_dir)
-        finally:
-            if prev_tt is None:
-                conf.unset("spark.sql.parquet.outputTimestampType")
-            else:
-                conf.set("spark.sql.parquet.outputTimestampType", prev_tt)
+        if conf.get("spark.sql.parquet.outputTimestampType", None) != "TIMESTAMP_MICROS":
+            conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        writer.parquet(commit_dir)
         new_files: list[DataFile] = []
         for dirpath, _dirs, fnames in os.walk(commit_dir):
             for fn in sorted(fnames):

@@ -130,8 +130,11 @@ def main() -> None:
             t0 = time.monotonic()
             plan = collect_plan(src_cat, as_of="2024-06-03T12:00:00+00:00")
             migrate(spark, plan, src_cat, dst, committed_at=_T[4])
-            verify(spark, plan, src_cat, dst).count()
+            rows = verify(spark, plan, src_cat, dst).collect()
             samples.append(round(time.monotonic() - t0, 3))
+            bad = [r.asDict() for r in rows if r["status"] != "success"]
+            if bad:  # a wrong verification must not post a time
+                raise RuntimeError(f"migration_e2e: verify failed: {bad}")
             shutil.rmtree(os.path.join(b2_root, f"dst{i}"), ignore_errors=True)
         raw_runs["migration_e2e"] = samples
         feature["migration_e2e"] = min(samples)

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -47,3 +49,17 @@ def spark():
         "spark.driver.memory": "4g",
     })
     yield s
+
+
+@contextmanager
+def job_group(spark):
+    """Run the block under a fresh Spark job group; yields a callable
+    returning the ids of the jobs started in this thread since."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

@@ -19,7 +19,7 @@ from apache_iceberg_tables_migration_tool_spark.queries.migration import (
     build_source_warehouse,
 )
 from apache_iceberg_tables_migration_tool_spark.sources.snapcat import SnapCatalog
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, job_group
 
 T = [f"2024-06-0{i}T00:00:00.000000+00:00" for i in range(1, 8)]
 
@@ -96,6 +96,30 @@ def test_schema_diff_catches_type_change(spark):
     assert {(r["col_name"], r["side"]) for r in d} == {
         ("v", "source_only"), ("v", "target_only")
     }
+
+
+def test_verify_schema_check_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """The schema comparison is driver-side metadata work: verifying a
+    type-changed table flags ``schema_match=False`` without starting a
+    Spark job (the checksum scans, stubbed here, are the only jobs
+    verify needs)."""
+    from apache_iceberg_tables_migration_tool_spark.plans import verifier
+
+    src = SnapCatalog(str(tmp_path / "src"))
+    dst = SnapCatalog(str(tmp_path / "dst"))
+    src.create_table("db", "t", "id bigint, v double", committed_at=T[0])
+    src.write("db", "t", spark.range(10).selectExpr("id", "CAST(id AS DOUBLE) AS v"),
+              committed_at=T[1])
+    dst.create_table("db", "t", "id bigint, v string", committed_at=T[0])
+    plan = collect_plan(src)
+    monkeypatch.setattr(verifier, "table_checksum", lambda df: 0)
+    with job_group(spark) as jobs:
+        row = verifier._verify_one(spark, plan.tables[0], src, dst)
+        assert jobs() == []
+    rep = dict(zip(verifier.VERIFY_SCHEMA.names, row))
+    assert rep["error"] is None
+    assert rep["schema_match"] is False
+    assert rep["status"] == "mismatch"
 
 
 def test_report_rollup_has_grand_total(spark, warehouses):

@@ -12,6 +12,7 @@ from apache_iceberg_tables_migration_tool_spark.sources.snapcat import (
     SnapCatalog,
     schema_to_ddl,
 )
+from tests.conftest import job_group
 
 T = [f"2024-01-0{i}T00:00:00.000000+00:00" for i in range(1, 8)]
 
@@ -362,6 +363,57 @@ def test_concurrent_appends_lose_no_commits(spark, cat):
     assert len(ids) == len(set(ids)) == 9  # create + 8 appends, no losses
     assert tbl.read(spark).count() == 800
     assert {r["w"] for r in tbl.read(spark).select("w").distinct().collect()} == set(range(8))
+
+
+def test_concurrent_writes_keep_int64_timestamps(spark, cat):
+    """Concurrent writes share the session conf: every file still gets
+    INT64 (TIMESTAMP_MICROS) timestamps with footer min/max stats,
+    never Spark's stat-less INT96 default."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.parquet as pq
+
+    spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    for i in range(8):
+        cat.create_table("db", f"ts{i}", "id bigint, ts timestamp")
+
+    def write(i):
+        cat.write("db", f"ts{i}", spark.range(50).selectExpr(
+            "id", "timestamp_seconds(id * 3600) AS ts"))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # more interleavings between the writers
+    try:
+        for _ in range(3):
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                list(pool.map(write, range(8)))
+    finally:
+        sys.setswitchinterval(interval)
+    for i in range(8):
+        tbl = cat.table("db", f"ts{i}")
+        files = tbl.resolve_snapshot().files
+        assert len(files) >= 3
+        for f in files:
+            md = pq.ParquetFile(os.path.join(tbl.root, f.path)).metadata
+            idx = md.schema.names.index("ts")
+            assert md.schema.column(idx).physical_type == "INT64", f.path
+            assert all(md.row_group(rg).column(idx).statistics.has_min_max
+                       for rg in range(md.num_row_groups)), f.path
+            assert "ts" in (f.stats or {}), f.path
+
+
+def test_read_launches_no_listing_job(spark, cat):
+    """Reads pass the manifest's exact files, so planning a scan of a
+    commit with more than 32 partition files starts no Spark
+    file-listing job."""
+    cat.create_table("db", "wide", "id bigint, p int", partition_by=["p"])
+    cat.write("db", "wide", spark.range(400).selectExpr("id", "CAST(id % 40 AS INT) AS p"))
+    tbl = cat.table("db", "wide")
+    assert len(tbl.resolve_snapshot().files) >= 40
+    with job_group(spark) as jobs:
+        df = tbl.read(spark)
+        assert jobs() == []
+    assert df.count() == 400
 
 
 def test_write_expect_parent_id_conflict(spark, cat):
